@@ -30,40 +30,42 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def mat_local(spark: SparkSession, df: DataFrame,
-              cap: int) -> "tuple[DataFrame, list | None]":
+# Row cap for mat_local's driver-local arm. It bounds driver memory,
+# not correctness: both arms compute the identical frame.
+MAT_LOCAL_ROW_CAP = 131072
+
+
+def mat_local(spark: SparkSession,
+              df: DataFrame) -> "tuple[DataFrame, list | None]":
     """Materialize a small intermediate driver-locally: one
     Arrow-serialized collect (``toArrow`` — no per-row py4j pickling),
     re-entering Spark as a JVM-held Arrow relation, so every downstream
     probe (counts, emptiness, threat splits) is answered from the
     returned row tuples with ZERO further Spark jobs and every
     downstream plan roots in a LocalRelation instead of a checkpointed
-    RDD scan. Returns (frame, rows); above ``cap`` rows the frame falls
-    back to ``localCheckpoint`` and rows is None — the cap bounds
-    driver memory, NOT correctness: both arms compute the identical
-    frame. ``cap <= 0`` forces the checkpoint arm (kill switch)."""
-    if cap > 0:
-        # CollectLimit's incremental execution (1 partition, then
-        # scale-up) would schedule SEVERAL jobs over an aggregate
-        # child; these frames are expected under the cap, so grab
-        # every partition in the first attempt — exactly one job,
-        # still row-capped for the driver.
-        key = "spark.sql.limit.initialNumPartitions"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "2147483647")
-        try:
-            tbl = df.limit(cap + 1).toArrow()
-        except Exception:  # noqa: BLE001 — unconvertible type → cluster-side
-            tbl = None
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        if tbl is not None and tbl.num_rows <= cap:
-            frame = spark.createDataFrame(tbl, schema=df.schema)
-            rows = list(zip(*(c.to_pylist() for c in tbl.columns)))
-            return frame, rows
+    RDD scan. Returns (frame, rows); above ``MAT_LOCAL_ROW_CAP`` rows
+    the frame falls back to ``localCheckpoint`` and rows is None."""
+    cap = MAT_LOCAL_ROW_CAP
+    # CollectLimit's incremental execution (1 partition, then scale-up)
+    # would schedule SEVERAL jobs over an aggregate child; these frames
+    # are expected under the cap, so grab every partition in the first
+    # attempt — exactly one job, still row-capped for the driver.
+    key = "spark.sql.limit.initialNumPartitions"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "2147483647")
+    try:
+        tbl = df.limit(cap + 1).toArrow()
+    except Exception:  # noqa: BLE001 — unconvertible type → cluster-side
+        tbl = None
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    if tbl is not None and tbl.num_rows <= cap:
+        frame = spark.createDataFrame(tbl, schema=df.schema)
+        rows = list(zip(*(c.to_pylist() for c in tbl.columns)))
+        return frame, rows
     return df.localCheckpoint(eager=True), None
 
 

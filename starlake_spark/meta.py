@@ -60,8 +60,7 @@ STALE_LOCK_S = 120.0
 # Every Nth version is a full checkpoint; the versions between are
 # delta-encoded (touched partitions + base pointer). 1 = always full.
 # Overridable per table via configuration "meta.checkpoint.interval".
-FULL_SNAPSHOT_INTERVAL = int(
-    os.environ.get("STARLAKE_CHECKPOINT_INTERVAL", "10"))
+FULL_SNAPSHOT_INTERVAL = 10
 
 
 class MetaError(Exception):

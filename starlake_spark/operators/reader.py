@@ -200,6 +200,11 @@ def _file_spark_schema(abs_path: str) -> "T.StructType | None":
 _RV_SAFE = re.compile(r"^[^,]+$")
 _COL_SAFE = re.compile(r"^[A-Za-z0-9_]+$")
 _PCT = re.compile(r"%([0-9A-Fa-f]{2})")
+# _flat_read_plan's cost gate: shallow histories whose average commit
+# group exceeds this many bytes keep the union path; at this depth the
+# union's plan size wins regardless of bytes.
+FLAT_SCAN_AVG_GROUP_BYTES = 8 << 20
+FLAT_SCAN_DEEP_GROUPS = 24
 
 
 def _decoded(col: "F.Column") -> "F.Column":
@@ -225,7 +230,6 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
     The tombstone flag column may appear in any subset of groups (the
     reader backfills null ⇒ not tombstoned). None ⇒ caller takes the
     per-group union path, which handles every evolution case.
-    ``STARLAKE_FLAT_SCAN=off`` disables the fast path.
 
     Range-partitioned histories (round 11): the hive dirs live UNDER
     each commit dir, which Spark's partition discovery rejects as
@@ -244,8 +248,6 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
     plans exactly one, so plan analysis, py4j chatter and codegen stay
     O(1) as a partition's delta history grows.
     """
-    if os.environ.get("STARLAKE_FLAT_SCAN") == "off":
-        return None
     if info.range_cols and not all(_COL_SAFE.match(c)
                                    for c in info.range_cols):
         return None
@@ -260,11 +262,9 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
         # for DEEP histories (where union's plan size is the cliff the
         # fast path exists to remove), but hands row-heavy shallow
         # scans back to the union path.
-        avg_cap = int(os.environ.get("STARLAKE_FLAT_SCAN_AVG_GROUP_BYTES",
-                                     str(8 << 20)))
-        deep = int(os.environ.get("STARLAKE_FLAT_SCAN_DEEP_GROUPS", "24"))
         total = sum(f.size for fs in groups.values() for f in fs)
-        if len(groups) < deep and total > avg_cap * len(groups):
+        if (len(groups) < FLAT_SCAN_DEEP_GROUPS
+                and total > FLAT_SCAN_AVG_GROUP_BYTES * len(groups)):
             return None
     schema = _schema(info)
     declared = {f.name: f.dataType for f in schema.fields}
@@ -619,6 +619,38 @@ def _plain_scan(
     return out
 
 
+def _collapse(u: DataFrame, schema: T.StructType, keys: list[str],
+              merge_operators: dict, ordering, tomb: bool) -> DataFrame:
+    """The keyed MoR collapse both ``_merge_scan`` inputs share: each
+    data column takes its value at the highest ``ordering(name)`` (a
+    merge operator folds the version-sorted (v, x) list instead), the
+    tombstone flag is last-wins on the commit version, and tombstoned
+    keys drop out. ``ordering`` is NULL on commits whose files lack the
+    column, so max_by and the when-collect skip them."""
+    aggs = []
+    for f in schema.fields:
+        if f.name in keys:
+            continue
+        ordc = ordering(f.name)
+        op = merge_operators.get(f.name)
+        if op is None:
+            aggs.append(F.max_by(F.col(f.name), ordc).alias(f.name))
+        else:
+            versions = F.sort_array(F.collect_list(
+                F.when(ordc.isNotNull(), F.struct(
+                    ordc.alias("v"), F.col(f.name).alias("x")))))
+            aggs.append(op.column(versions, f.dataType)
+                        .cast(f.dataType).alias(f.name))
+    if tomb:
+        aggs.append(F.max_by(F.coalesce(F.col(TOMBSTONE_COL),
+                                        F.lit(False)), F.col(_WV))
+                    .alias(TOMBSTONE_COL))
+    merged = u.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
+    if tomb:
+        merged = merged.filter(~F.col(TOMBSTONE_COL))
+    return merged.select(*[F.col(f.name) for f in schema.fields])
+
+
 def _merge_scan(
     spark: SparkSession,
     store: ManifestStore,
@@ -628,16 +660,12 @@ def _merge_scan(
 ) -> DataFrame:
     schema = _schema(info)
     keys = info.range_cols + info.hash_cols
-    data_cols = [f for f in schema.fields if f.name not in keys]
-
     groups = _group_files(files)
     flat = _flat_read_plan(store, info, groups)
     if flat is not None:
-        # Single-relation MoR collapse: every group's columns exist at
-        # that group's version (uniform exist_cols — checked by the
-        # gate), so the per-column ordering literal degenerates to the
-        # file's commit version and the whole union collapses into ONE
-        # parquet scan + version column + the same keyed aggregation.
+        # Single-relation MoR collapse: one parquet scan + a version
+        # column derived from each file's commit dir feed the keyed
+        # aggregation directly.
         read_schema, dir_wv, f_tomb, absent = flat
         paths = [f.path if os.path.isabs(f.path)
                  else os.path.join(store.table_path, f.path)
@@ -651,9 +679,8 @@ def _merge_scan(
              .select("*", *extra))
 
         def _ord(col_name):
-            # per-column ordering: NULL on commits where the column is
-            # absent (max_by / the when-collect skip null orderings) —
-            # the single-relation equivalent of the union path's
+            # NULL on the commits where the column is absent — the
+            # single-relation equivalent of the union path's
             # per-branch null-ordering literal
             miss = absent.get(col_name)
             if not miss:
@@ -661,26 +688,8 @@ def _merge_scan(
             return F.when(~F.col(_WV).isin(*[int(v) for v in miss]),
                           F.col(_WV))
 
-        aggs = []
-        for f in data_cols:
-            ordc = _ord(f.name)
-            op = merge_operators.get(f.name)
-            if op is None:
-                aggs.append(F.max_by(F.col(f.name), ordc).alias(f.name))
-            else:
-                versions = F.sort_array(F.collect_list(
-                    F.when(ordc.isNotNull(), F.struct(
-                        ordc.alias("v"), F.col(f.name).alias("x")))))
-                aggs.append(op.column(versions, f.dataType)
-                            .cast(f.dataType).alias(f.name))
-        if f_tomb:
-            aggs.append(F.max_by(F.coalesce(F.col(TOMBSTONE_COL),
-                                            F.lit(False)), F.col(_WV))
-                        .alias(TOMBSTONE_COL))
-        merged = u.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-        if f_tomb:
-            merged = merged.filter(~F.col(TOMBSTONE_COL))
-        return merged.select(*[F.col(f.name) for f in schema.fields])
+        return _collapse(u, schema, keys, merge_operators, _ord, f_tomb)
+    data_cols = [f.name for f in schema.fields if f.name not in keys]
     branches = []
     amap = alias_map(info)
     any_tomb = any(TOMBSTONE_COL in fs[0].exist_cols for fs in groups.values())
@@ -695,11 +704,11 @@ def _merge_scan(
         # and an analyzer pass, which at ~10 data columns dominates
         # plan-build latency.
         extra = [F.lit(wv).cast("long").alias(_WV)]
-        for f in data_cols:
+        for c in data_cols:
             ordv = (F.lit(wv).cast("long")
-                    if _resolve_physical(f.name, exist, amap) is not None
+                    if _resolve_physical(c, exist, amap) is not None
                     else F.lit(None).cast("long"))
-            extra.append(ordv.alias(_ORD + f.name))
+            extra.append(ordv.alias(_ORD + c))
         has_tomb = TOMBSTONE_COL in d.columns
         if any_tomb and not has_tomb:
             # every branch asserts an opinion on liveness: tombstone
@@ -716,32 +725,8 @@ def _merge_scan(
     u = branches[0]
     for b in branches[1:]:
         u = u.unionByName(b)
-
-    aggs = []
-    for f in data_cols:
-        ordc = F.col(_ORD + f.name)
-        op = merge_operators.get(f.name)
-        if op is None:
-            aggs.append(F.max_by(F.col(f.name), ordc).alias(f.name))
-        else:
-            versions = F.sort_array(
-                F.collect_list(
-                    F.when(
-                        ordc.isNotNull(),
-                        F.struct(ordc.alias("v"), F.col(f.name).alias("x")),
-                    )
-                )
-            )
-            aggs.append(op.column(versions, f.dataType).cast(f.dataType).alias(f.name))
-
-    if any_tomb:
-        # liveness collapses like any last-wins column, keyed on the
-        # always-present commit version
-        aggs.append(F.max_by(F.col(TOMBSTONE_COL), F.col(_WV)).alias(TOMBSTONE_COL))
-    merged = u.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-    if any_tomb:
-        merged = merged.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
-    return merged.select(*[F.col(f.name) for f in schema.fields])
+    return _collapse(u, schema, keys, merge_operators,
+                     lambda c: F.col(_ORD + c), any_tomb)
 
 
 def _eval_part_rhs_py(rhs: str, dtype):

@@ -10,12 +10,14 @@ Spark-first translation: ``df.repartition(n, *hash_cols)`` assigns each
 row to partition ``pmod(murmur3(hash_cols), n)`` — that partition id IS
 the bucket id and is stable across commits for a fixed ``n``, so delta
 files line up with base files bucket-by-bucket (same property the
-reference gets from BucketingUtils). ``sortWithinPartitions(range_cols +
-hash_cols)`` both satisfies the dynamic-partition-write required
-ordering (so Spark inserts no extra sort) and keeps rows key-sorted
-inside every file. Files land in a per-commit directory
-(``data/<commit_id>/``) so they are invisible until the manifest commit
-publishes them — the atomicity trick of Delta-style log stores.
+reference gets from BucketingUtils); bucketed writes run with AQE off
+so that no exchange feeding the files is ever coalesced.
+``sortWithinPartitions(range_cols + hash_cols)`` both satisfies the
+dynamic-partition-write required ordering (so Spark inserts no extra
+sort) and keeps rows key-sorted inside every file. Files land in a
+per-commit directory (``data/<commit_id>/``) so they are invisible
+until the manifest commit publishes them — the atomicity trick of
+Delta-style log stores.
 
 Scale note: one file per (partition, bucket) per commit means write
 parallelism = bucket_num × touched partitions; pick bucket_num so that
@@ -28,6 +30,7 @@ import json
 import os
 import re
 import shutil
+import threading
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -432,10 +435,7 @@ def _aqe_pointless(df: DataFrame) -> bool:
     stage — one extra scheduling round-trip and shuffle spill per
     commit, which doubles the latency of small (CDC-trickle) commits.
     Probe is O(1): TreeNode caches its pattern bitset, and analysis of
-    the frame has already run (normalize_for_write touched the schema).
-    ``STARLAKE_WRITE_AQE=keep`` disables the optimization."""
-    if os.environ.get("STARLAKE_WRITE_AQE") == "keep":
-        return False
+    the frame has already run (normalize_for_write touched the schema)."""
     try:
         p = df._jdf.queryExecution().analyzed()
         tp = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
@@ -445,22 +445,34 @@ def _aqe_pointless(df: DataFrame) -> bool:
         return False
 
 
+# session → [no-AQE writes in flight, AQE setting to restore]
+_NO_AQE_LOCK = threading.Lock()
+_no_aqe: dict = {}
+
+
 def _save_no_aqe(spark: SparkSession, writer, abs_dir: str) -> None:
-    """Execute the write with AQE off (join/agg-free plans only —
-    see _aqe_pointless). Session-conf flip: a concurrent thread that
-    plans a query inside this window loses AQE for that one plan (a
-    latency matter, never correctness); single-writer sessions — the
-    norm — are unaffected."""
+    """Execute the write with AQE off (join/agg-free plans — see
+    _aqe_pointless — and every bucketed write). Session-conf flip,
+    counted per session: AQE comes back only when the session's last
+    such write ends, so concurrent writers never turn it on under one
+    another (a bucketed write's layout depends on it). A concurrent
+    non-write query planned inside the window loses AQE for that one
+    plan — a latency matter, never correctness."""
     key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, "true")
-    if prev != "true":
-        writer.save(abs_dir)
-        return
-    spark.conf.set(key, "false")
+    with _NO_AQE_LOCK:
+        held = _no_aqe.get(spark)
+        if held is None:
+            held = _no_aqe[spark] = [0, spark.conf.get(key, "true")]
+            spark.conf.set(key, "false")
+        held[0] += 1
     try:
         writer.save(abs_dir)
     finally:
-        spark.conf.set(key, prev)
+        with _NO_AQE_LOCK:
+            held[0] -= 1
+            if not held[0]:
+                del _no_aqe[spark]
+                spark.conf.set(key, held[1])
 
 
 def _list_written_files(abs_dir: str) -> list[str]:
@@ -695,7 +707,7 @@ def write_files(
         if c in df.columns:
             writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
             any_bloom = True
-    if any_bloom and os.environ.get("STARLAKE_BLOOM_ADAPTIVE", "on") != "off":
+    if any_bloom:
         # Size the bloom bitset to the rows ACTUALLY written
         # (parquet-mr adaptive mode, PARQUET-2254): the default sizes
         # every bitset for parquet.bloom.filter.expected.ndv (1M) —
@@ -712,7 +724,14 @@ def write_files(
     if info.range_cols:
         writer = writer.partitionBy(*info.range_cols)
     try:
-        if _aqe_pointless(df):
+        # Bucketed writes run without AQE too: file N must hold exactly
+        # the rows with pmod(hash(hash_cols), bucket_num) = N. An input
+        # already hash-partitioned on the key into bucket_num partitions
+        # (a MoR collapse at shuffle.partitions == bucket_num) makes the
+        # planner drop the bucket repartition as redundant, and AQE
+        # would then coalesce that input exchange — one file holding
+        # several buckets under a single bucket id.
+        if info.hash_cols or _aqe_pointless(df):
             _save_no_aqe(spark, writer, abs_dir)
         else:
             writer.save(abs_dir)

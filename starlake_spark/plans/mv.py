@@ -43,13 +43,21 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from starlake_spark import catalog
-from starlake_spark.local import local_df
+from starlake_spark.local import local_df, mat_local
 from starlake_spark.meta import ManifestStore
 from starlake_spark.table import StarTable, create_table
 
 
 class UnsupportedPlan(Exception):
     """Query shape outside the MV-rewrite subset — caller falls back."""
+
+
+# Most distinct touched/threatened group keys a refresh broadcasts for
+# its semi-joins (≈ tens of MB); larger windows take a shuffled semi.
+BROADCAST_KEY_LIMIT = 1_000_000
+# Most distinct join-key values a join-MV window turns into an IN-list
+# scan prune of a pinned side; larger windows skip the prune.
+JOIN_PRUNE_KEY_LIMIT = 1024
 
 
 # ---------------------------------------------------------------------------
@@ -1215,16 +1223,14 @@ def _prune_touched(old: DataFrame, dkeys: DataFrame, keys: list[str],
     """Semi-prune the backing table to the window's touched groups —
     scan-filter shape, never an O(|MV|) shuffle of the backing table.
     Broadcast budget: a window touching more distinct groups than
-    ``STARLAKE_MV_BROADCAST_KEY_LIMIT`` (default 1M keys ≈ tens of MB)
-    must not fail the refresh on the broadcast size cap — it falls back
-    to a shuffled left-semi, still O(touched + pruned) exchange."""
+    ``BROADCAST_KEY_LIMIT`` must not fail the refresh on the broadcast
+    size cap — it falls back to a shuffled left-semi, still
+    O(touched + pruned) exchange."""
     semi = None
     for k in keys:
         e = old[k].eqNullSafe(dkeys[k])
         semi = e if semi is None else semi & e
-    limit = int(os.environ.get("STARLAKE_MV_BROADCAST_KEY_LIMIT",
-                               "1000000"))
-    if n_touched <= limit:
+    if n_touched <= BROADCAST_KEY_LIMIT:
         return old.join(F.broadcast(dkeys), semi, "left_semi")
     return old.join(dkeys, semi, "left_semi")
 
@@ -1343,25 +1349,6 @@ def _rescan_inlist(spec, tkeys_rows, cols_dt) -> list[str]:
     return out
 
 
-def _mat_touched(spark, df: DataFrame) -> "tuple[DataFrame, list | None]":
-    """Materialize an O(touched-groups)-small refresh intermediate:
-    capped driver collect + Arrow-local relation, so every downstream
-    probe (counts, emptiness, threat splits) is answered from the
-    driver rows with ZERO Spark jobs and every downstream plan roots in
-    a JVM-held LocalRelation instead of a checkpointed RDD scan
-    (optimization round 11, guide §5 — the refresh cycle used to pay a
-    localCheckpoint job plus one job per probe). Returns (frame, rows);
-    rows is None above the cap, where the frame falls back to
-    ``localCheckpoint`` exactly as before (windows touching more than
-    ``STARLAKE_MV_LOCAL_ROW_CAP`` groups keep the cluster-side shape —
-    the cap bounds driver memory, NOT correctness: both arms compute
-    the identical frame)."""
-    from starlake_spark.local import mat_local
-
-    cap = int(os.environ.get("STARLAKE_MV_LOCAL_ROW_CAP", "131072"))
-    return mat_local(spark, df, cap)
-
-
 def _pykey(vals) -> tuple:
     """Driver-side group-key normalization matching Spark's grouping
     semantics: NaN groups with NaN (Python NaN != NaN), -0.0 with 0.0
@@ -1390,8 +1377,6 @@ def _rescan_frame(spark, spec, pinned_src, tkeys, n_thr: int,
     extra_where = []
     tk = None
     if tkeys is not None and spec["groups"]:
-        limit = int(os.environ.get("STARLAKE_MV_BROADCAST_KEY_LIMIT",
-                                   "1000000"))
         if n_thr <= 1000:
             rows = tkeys.collect()
             extra_where = _rescan_inlist(
@@ -1400,7 +1385,7 @@ def _rescan_frame(spark, spec, pinned_src, tkeys, n_thr: int,
         tk = tkeys
         for g in spec["groups"]:
             tk = tk.withColumnRenamed(g["out"], g["out"] + "__mvtk")
-        if n_thr <= limit:
+        if n_thr <= BROADCAST_KEY_LIMIT:
             tk = F.broadcast(tk)
     src_df = pinned_src(list(spec["where"]) + extra_where)
     if tk is not None:
@@ -1415,7 +1400,7 @@ def _rescan_frame(spark, spec, pinned_src, tkeys, n_thr: int,
         rs = spark.sql(_mv_init_sql(spec, from_view=rv))
         cast = [F.col(c).cast(old_dt[c]).alias(c) for c in rs.columns
                 if c in old_dt]
-        return _mat_touched(spark, rs.select(*cast))
+        return mat_local(spark, rs.select(*cast))
     finally:
         try:
             spark.catalog.dropTempView(rv)
@@ -1530,7 +1515,7 @@ def _sync_distinct_aux(session, spec, src: ManifestStore, t: StarTable,
                 drop_v = f"_mv_aux_{uuid.uuid4().hex[:10]}"
                 ch2.createOrReplaceTempView(drop_v)
                 ch_v = drop_v
-            delta2, d2rows = _mat_touched(spark, spark.sql(
+            delta2, d2rows = mat_local(spark, spark.sql(
                 _aux_delta_sql(spec, a, ch_v, signed=True)))
             _merge_aux(spark, aux_t, delta2, keys + ["_dx"], app, cur,
                        n_rows=len(d2rows) if d2rows is not None else None)
@@ -1695,7 +1680,7 @@ def _apply_delta(spark, t: StarTable, spec, delta: DataFrame,
     # each re-run the change-window scan and the backing-table join.
     # Capped driver collect (round 11): when the rows fit on the
     # driver, every probe below is answered from them with no job.
-    full_all, frows = _mat_touched(
+    full_all, frows = mat_local(
         spark, m.select(*keys, *finals, *hcols, F.col("_mv_rescan_")))
     fa_cols = full_all.columns
     ri = fa_cols.index("_mv_rescan_")
@@ -1729,7 +1714,7 @@ def _apply_delta(spark, t: StarTable, spec, delta: DataFrame,
         # the recount joined aux-table scans back in: re-materialize so
         # the live/dead split below stays row-known (and the write does
         # not re-run the recount join per consumer)
-        full, fold_rows = _mat_touched(spark, full)
+        full, fold_rows = mat_local(spark, full)
         fold_cols = full.columns
     live = (full.filter(F.col(f"{_MVH}n") > 0).select(*out_cols))
     dead = full.filter(F.col(f"{_MVH}n") <= 0).select(*keys)
@@ -1891,8 +1876,7 @@ def _incremental_refresh(session, ent,
         # broadcast-budget count below would otherwise each re-run the
         # change-window scan. Driver-local rows (when under the cap)
         # answer the count/min probe with no extra job.
-        delta, drows = _mat_touched(spark,
-                                    spark.sql(_mv_delta_sql(spec, cv)))
+        delta, drows = mat_local(spark, spark.sql(_mv_delta_sql(spec, cv)))
         pinned_src = None
         if any(a.get("rescan") for a in spec["aggs"]):
             # rescan target: the source PINNED at the window end (cur).
@@ -2037,8 +2021,8 @@ def _join_prune_predicates(ch, spec, cname) -> dict:
     """Δ-KEY FILE PRUNING for the pinned sides of a join-MV window:
     for every table with a DIRECT equi-edge to the changed table,
     collect the window's distinct join-key values (bounded by
-    ``STARLAKE_MV_JOIN_PRUNE_KEY_LIMIT``, default 1024) and return an
-    ``IN``-predicate for that table's scan. The scan layer turns it
+    ``JOIN_PRUNE_KEY_LIMIT``) and return an ``IN``-predicate for that
+    table's scan. The scan layer turns it
     into partition/bucket/stats/bloom FILE skipping plus a row filter
     — rows of a pinned table whose edge column matches no Δ key cannot
     join any change row, so dropping them is exact for inner joins.
@@ -2050,9 +2034,6 @@ def _join_prune_predicates(ch, spec, cname) -> dict:
     over-budget windows and non-int/str key types skip pruning — a
     pure optimization, never a correctness surface. ``ch`` must be
     materialized (localCheckpoint) — the collects re-read it."""
-    limit = int(os.environ.get("STARLAKE_MV_JOIN_PRUNE_KEY_LIMIT", "1024"))
-    if limit <= 0:
-        return {}
     edges: dict[str, list] = {}
     for p in spec["join_pairs"]:
         for a, b, ac, bc in ((p["lt"], p["rt"], p["l"], p["r"]),
@@ -2068,9 +2049,10 @@ def _join_prune_predicates(ch, spec, cname) -> dict:
             if ccol not in cache:
                 rows = ch.select(ccol).where(
                     F.col(ccol).isNotNull()).distinct() \
-                    .limit(limit + 1).collect()
+                    .limit(JOIN_PRUNE_KEY_LIMIT + 1).collect()
                 cache[ccol] = ([r[0] for r in rows]
-                               if len(rows) <= limit else None)
+                               if len(rows) <= JOIN_PRUNE_KEY_LIMIT
+                               else None)
             vals = cache[ccol]
             if not vals:  # over budget (None) or empty window slice
                 continue
@@ -2189,7 +2171,7 @@ def _incremental_refresh_join(session, ent, t: StarTable,
         jv = f"_mv_jch_{uuid.uuid4().hex[:10]}"
         signed.createOrReplaceTempView(jv)
         try:
-            delta, drows = _mat_touched(
+            delta, drows = mat_local(
                 spark, spark.sql(_mv_delta_sql(spec, jv)))
             txn_app = f"mv_refresh:{t.info.table_id}:{cname}"
             if drows is not None:
@@ -2401,8 +2383,6 @@ def update_material_view(session, name: str, force: bool = False) -> bool:
         try:
             got = _incremental_refresh(session, ent, t)
         except Exception:
-            if os.environ.get("STARLAKE_MV_DEBUG"):
-                raise
             got = None  # any window hiccup → provably-correct full run
         if got is not None:
             mode, fps = got

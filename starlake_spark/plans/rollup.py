@@ -33,13 +33,16 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from starlake_spark.local import local_df
+from starlake_spark.local import local_df, mat_local
 from starlake_spark.meta import ManifestStore
 from starlake_spark.operators import dml, reader
 from starlake_spark.table import StarTable, create_table
 
 _CFG = "rollup."
 _VALID_AGGS = ("sum", "min", "max", "count", "avg")
+# Most threatened min/max cells one refresh rescans; more fall back to
+# the full rebuild.
+RESCAN_CELL_LIMIT = 512
 
 
 def _partials(df: DataFrame, time_col: str, bucket: str,
@@ -189,19 +192,6 @@ def _signed_partials(ch: DataFrame, time_col: str, bucket: str,
               .agg(*exprs))
 
 
-def _mat_rollup(spark, df: DataFrame) -> "tuple[DataFrame, list | None]":
-    """Capped driver-local materialization of an O(touched-cells)
-    partial frame (shared mat_local contract: Arrow collect + local
-    relation under the cap, localCheckpoint above it). Same cap knob
-    as the MV refresh intermediates."""
-    import os as _os
-
-    from starlake_spark.local import mat_local
-
-    cap = int(_os.environ.get("STARLAKE_MV_LOCAL_ROW_CAP", "131072"))
-    return mat_local(spark, df, cap)
-
-
 def _minmax_threatened(spark, t: StarTable, partials: DataFrame,
                        cfg: dict, partial_rows: "list | None" = None):
     """Split a signed hash-window partial frame into (threatened_cells,
@@ -213,17 +203,15 @@ def _minmax_threatened(spark, t: StarTable, partials: DataFrame,
     ``partials`` must be materialized.
 
     Returns (None, safe, []) when nothing threatens; ("overflow",
-    safe, None) when the threat set exceeds the rescan cell cap
+    safe, None) when the threat set exceeds RESCAN_CELL_LIMIT
     (caller falls back to the full rebuild); else (thr, safe, rows)
-    where ``thr`` is a DRIVER-LOCAL relation of the ≤cap threatened
+    where ``thr`` is a DRIVER-LOCAL relation of the threatened
     cells and ``rows`` its collected rows — ONE collect job instead of
     the former checkpoint + count + collect trio, and every downstream
     use (broadcast semi-joins, the rescan's time lower bound) plans
     off the local relation with no further jobs (optimization round
     10, guide §1.2). The safe frame always has the `_rt_` probe
     columns dropped."""
-    import os as _os
-
     mm = [(c, op) for c, op in cfg["aggs"].items()
           if op in ("min", "max")]
     keys = ["bucket_ts"] + cfg["group_cols"]
@@ -277,11 +265,10 @@ def _minmax_threatened(spark, t: StarTable, partials: DataFrame,
         ta = r.isNotNull() & ~(exists & beats)
         threat = ta if threat is None else (threat | ta)
     thr_plan = j.filter(threat).select(*keys).distinct()
-    cap = int(_os.environ.get("STARLAKE_ROLLUP_RESCAN_CELL_LIMIT", "512"))
-    rows = thr_plan.limit(cap + 1).collect()
+    rows = thr_plan.limit(RESCAN_CELL_LIMIT + 1).collect()
     if not rows:
         return None, clean, []
-    if len(rows) > cap:
+    if len(rows) > RESCAN_CELL_LIMIT:
         return "overflow", clean, None
     thr = local_df(spark, rows, thr_plan.schema)
     acond = None
@@ -464,7 +451,7 @@ def refresh_rollup(spark: SparkSession, t: StarTable) -> dict:
             rows = None
             cond = None
             if has_mm:
-                partials, prows = _mat_rollup(spark, partials)
+                partials, prows = mat_local(spark, partials)
                 thr, partials, rows = _minmax_threatened(
                     spark, t, partials, cfg, partial_rows=prows)
             keys = ["bucket_ts"] + cfg["group_cols"]
@@ -696,7 +683,7 @@ def _realtime_frame(spark: SparkSession, t: StarTable,
                 # cells are REPLACED by pinned full-cell recomputes in
                 # the merged view instead of folded; a threat set over
                 # the rescan cap serves the full recompute instead
-                tail, trows = _mat_rollup(spark, tail)
+                tail, trows = mat_local(spark, tail)
                 replace_thr, tail, thr_rows = _minmax_threatened(
                     spark, t, tail, cfg, partial_rows=trows)
                 if replace_thr == "overflow":

@@ -1783,8 +1783,7 @@ def _window_key_frame(spark, store, info, keys, new_files):
     from starlake_spark.operators import reader as rd
 
     groups = rd._group_files(new_files)
-    flat_ok = (not info.range_cols and len(groups) > 1
-               and os.environ.get("STARLAKE_FLAT_SCAN") != "off")
+    flat_ok = not info.range_cols and len(groups) > 1
     if flat_ok:
         schema = rd._schema(info)
         declared = {f.name: f.dataType for f in schema.fields}

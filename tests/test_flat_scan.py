@@ -3,16 +3,15 @@ group of a snapshot is schema-homogeneous, `_merge_scan`/`_plain_scan`
 serve the whole history through ONE parquet relation (version
 attributed from the file's directory) instead of a union of per-commit
 reads. These tests pin (a) bit-identical results vs the union path
-(``STARLAKE_FLAT_SCAN=off``), including tombstone deltas, in-batch
+(``_flat_read_plan`` patched to None), including tombstone deltas, in-batch
 churn and resurrect-after-delete, (b) the single-relation plan shape,
 and (c) that evolution shapes the gate cannot serve fall back to the
 union path and stay correct."""
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
+from starlake_spark.operators import reader as R
 from starlake_spark.table import StarTable, create_table
 
 
@@ -31,6 +30,14 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _union_rows(monkeypatch, read):
+    """``read()``'s rows with the flat fast path refused, i.e. through
+    the per-group union reference path."""
+    with monkeypatch.context() as mp:
+        mp.setattr(R, "_flat_read_plan", lambda *a, **k: None)
+        return _rows(read())
+
+
 @pytest.fixture()
 def churned_table(spark, tmp_table_dir):
     df = _mk_df(spark)
@@ -47,9 +54,7 @@ def churned_table(spark, tmp_table_dir):
 
 
 def test_merge_scan_flat_equals_union(spark, churned_table, monkeypatch):
-    monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
-    ref = _rows(churned_table.to_df())
-    monkeypatch.delenv("STARLAKE_FLAT_SCAN")
+    ref = _union_rows(monkeypatch, churned_table.to_df)
     fast_df = churned_table.to_df()
     assert _rows(fast_df) == ref
     # ONE parquet relation for the whole 6-commit history
@@ -63,9 +68,7 @@ def test_plain_scan_flat_equals_union(spark, tmp_table_dir, monkeypatch):
     t = create_table(spark, df, tmp_table_dir, configuration=NO_COMPACT)
     t.write(df.withColumn("k", F.col("k") + 10_000))
     t.write(df.withColumn("k", F.col("k") + 20_000))
-    monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
-    ref = _rows(t.to_df())
-    monkeypatch.delenv("STARLAKE_FLAT_SCAN")
+    ref = _union_rows(monkeypatch, t.to_df)
     fast_df = t.to_df()
     assert _rows(fast_df) == ref
     plan = fast_df._jdf.queryExecution().executedPlan().toString()
@@ -90,15 +93,12 @@ def test_flat_serves_add_column_evolution(spark, tmp_table_dir,
     t.upsert(df.filter(F.col("k") % 3 == 0)
                .withColumn("bal", F.col("bal") + 7.0)
                .withColumn("extra", F.lit(42)))
-    from starlake_spark.operators import reader as R
     store = t.store
     info = store.table_info(refresh=True)
     files = store.snapshot().all_files()
     groups = R._group_files(files)
     assert R._flat_read_plan(store, info, groups) is not None
-    monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
-    ref = _rows(t.to_df())
-    monkeypatch.delenv("STARLAKE_FLAT_SCAN")
+    ref = _union_rows(monkeypatch, t.to_df)
     fast_df = t.to_df()
     assert _rows(fast_df) == ref
     plan = fast_df._jdf.queryExecution().executedPlan().toString()
@@ -119,7 +119,6 @@ def test_flat_gate_refuses_rename(spark, tmp_table_dir):
     t.upsert(df.filter(F.col("k") % 2 == 0)
                .withColumn("bal", F.col("bal") + 5.0))
     t.rename_column("nm", "label")
-    from starlake_spark.operators import reader as R
     info = t.store.table_info(refresh=True)
     groups = R._group_files(t.store.snapshot().all_files())
     assert R._flat_read_plan(t.store, info, groups) is None
@@ -127,7 +126,8 @@ def test_flat_gate_refuses_rename(spark, tmp_table_dir):
     assert out[7].label == "name_7"
 
 
-def test_flat_gate_refuses_merge_on_in_batch_ties(spark, churned_table):
+def test_flat_gate_refuses_merge_on_in_batch_ties(spark, churned_table,
+                                                  monkeypatch):
     """The flat path and union path must collapse in-batch duplicate
     keys identically (both order by commit version only — ties within
     a commit are pre-collapsed by upsert before writing)."""
@@ -135,11 +135,8 @@ def test_flat_gate_refuses_merge_on_in_batch_ties(spark, churned_table):
     # merge operators ride the same sort_array(collect_list) shape:
     from starlake_spark import merge_ops as mo
     df_ops = t.to_df(merge_operators={"bal": mo.SumMergeOp()})
-    os.environ["STARLAKE_FLAT_SCAN"] = "off"
-    try:
-        ref = _rows(t.to_df(merge_operators={"bal": mo.SumMergeOp()}))
-    finally:
-        os.environ.pop("STARLAKE_FLAT_SCAN", None)
+    ref = _union_rows(monkeypatch, lambda: t.to_df(
+        merge_operators={"bal": mo.SumMergeOp()}))
     assert _rows(df_ops) == ref
 
 
@@ -173,9 +170,7 @@ def churned_range_table(spark, tmp_table_dir):
 
 def test_range_merge_scan_flat_equals_union(spark, churned_range_table,
                                             monkeypatch):
-    monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
-    ref = _rows(churned_range_table.to_df())
-    monkeypatch.delenv("STARLAKE_FLAT_SCAN")
+    ref = _union_rows(monkeypatch, churned_range_table.to_df)
     fast_df = churned_range_table.to_df()
     assert _rows(fast_df) == ref
     plan = fast_df._jdf.queryExecution().executedPlan().toString()
@@ -187,9 +182,7 @@ def test_range_flat_version_pinned_reads(spark, churned_range_table,
                                          monkeypatch):
     t = churned_range_table
     for v in range(1, t.store.latest_version() + 1):
-        monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
-        ref = _rows(t.to_df(version=v))
-        monkeypatch.delenv("STARLAKE_FLAT_SCAN")
+        ref = _union_rows(monkeypatch, lambda: t.to_df(version=v))
         assert _rows(t.to_df(version=v)) == ref, f"version {v}"
 
 
@@ -210,13 +203,10 @@ def test_range_flat_uri_escaped_values(spark, tmp_table_dir,
                      hash_partitions=["k"], hash_bucket_num=2,
                      configuration=NO_COMPACT)
     t.upsert(df.filter("k % 5 = 0").withColumn("bal", F.lit(0.0)))
-    from starlake_spark.operators import reader as rd
-    groups = rd._group_files(t.store.snapshot().all_files())
-    assert rd._flat_read_plan(t.store, t.store.table_info(),
+    groups = R._group_files(t.store.snapshot().all_files())
+    assert R._flat_read_plan(t.store, t.store.table_info(),
                               groups) is not None
-    monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
-    ref = _rows(t.to_df())
-    monkeypatch.delenv("STARLAKE_FLAT_SCAN")
+    ref = _union_rows(monkeypatch, t.to_df)
     assert _rows(t.to_df()) == ref
 
 
@@ -235,11 +225,8 @@ def test_range_flat_gate_refuses_comma_values(spark, tmp_table_dir,
                      hash_partitions=["k"], hash_bucket_num=2,
                      configuration=NO_COMPACT)
     t.upsert(df.filter("k % 5 = 0").withColumn("bal", F.lit(0.0)))
-    from starlake_spark.operators import reader as rd
-    groups = rd._group_files(t.store.snapshot().all_files())
-    assert rd._flat_read_plan(t.store, t.store.table_info(),
+    groups = R._group_files(t.store.snapshot().all_files())
+    assert R._flat_read_plan(t.store, t.store.table_info(),
                               groups) is None
-    monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
-    ref = _rows(t.to_df())
-    monkeypatch.delenv("STARLAKE_FLAT_SCAN")
+    ref = _union_rows(monkeypatch, t.to_df)
     assert _rows(t.to_df()) == ref

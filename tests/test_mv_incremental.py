@@ -61,6 +61,14 @@ def _view_rows(sess, name="mv_t"):
     return {tuple(r) for r in sess.sql(f"SELECT * FROM {name}").collect()}
 
 
+def _forbid_full_refresh(mp):
+    """Make the full-refresh fallback raise, so a failing incremental
+    path surfaces instead of being repaired by a silent rebuild."""
+    def _full(*a, **k):
+        raise AssertionError("refresh fell back to a full rebuild")
+    mp.setattr(mv, "_mv_init_frame", _full)
+
+
 def test_incremental_equals_full_append_only(sess, spark, sf_dir, tmp_path):
     from starlake_spark import create_table
 
@@ -760,7 +768,7 @@ def test_broadcast_budget_falls_back_to_shuffled_semi(
     mv.create_material_view(sess, "mv_t", str(tmp_path / "mv"), MV_SQL)
     src.upsert(_orders_frame(spark, sf_dir, 600, 800))
     sess._sync_views()
-    monkeypatch.setenv("STARLAKE_MV_BROADCAST_KEY_LIMIT", "1")
+    monkeypatch.setattr(mv, "BROADCAST_KEY_LIMIT", 1)
     assert mv.update_material_view(sess, "mv_t") is True
     assert sess.table("mv_t").store.snapshot().commit_type == "delta"
     assert _view_rows(sess) == _full_rerun(sess)
@@ -777,9 +785,9 @@ def test_broadcast_budget_falls_back_to_shuffled_semi(
         return "strategy=broadcast" in \
             df._jdf.queryExecution().optimizedPlan().toString()
 
-    monkeypatch.setenv("STARLAKE_MV_BROADCAST_KEY_LIMIT", "1000000")
+    monkeypatch.setattr(mv, "BROADCAST_KEY_LIMIT", 1_000_000)
     assert _hinted(_prune_touched(old, dk, ["st"], 2))
-    monkeypatch.setenv("STARLAKE_MV_BROADCAST_KEY_LIMIT", "1")
+    monkeypatch.setattr(mv, "BROADCAST_KEY_LIMIT", 1)
     assert not _hinted(_prune_touched(old, dk, ["st"], 2))
 
 
@@ -950,14 +958,12 @@ def test_join_mv_crash_between_sequential_steps(sess, spark, sf_dir,
         if calls["n"] == 1:
             raise RuntimeError("injected crash between steps")
 
-    mv._apply_delta = boom
-    try:
-        os.environ["STARLAKE_MV_DEBUG"] = "1"
-        with pytest.raises(RuntimeError, match="between steps"):
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(mv, "_apply_delta", boom)
+        _forbid_full_refresh(mp)
+        with pytest.raises(AssertionError, match="full rebuild"):
             mv.update_material_view(sess, "mv_j")
-    finally:
-        mv._apply_delta = orig
-        os.environ.pop("STARLAKE_MV_DEBUG", None)
+    assert calls["n"] == 1  # the injected crash, right after step one
     # registry still at the old fingerprints (crash before save)
     assert mv._load_registry(sess.warehouse)["mv_j"]["fingerprints"] == \
         fps_before
@@ -1382,8 +1388,6 @@ def test_full_fallback_stamps_cursor_no_double_apply(sess, spark, sf_dir,
     # reference-parity full fallback (overwrite)
     src.write(_orders_frame(spark, sf_dir, 600, 900), mode="append")
     with pytest.MonkeyPatch.context() as mp:
-        mp.delenv("STARLAKE_MV_DEBUG", raising=False)
-
         def _boom(session, ent, t):
             raise RuntimeError("transient executor loss")
 
@@ -1682,11 +1686,9 @@ def test_hash_window_never_opens_untouched_cells(sess, spark, sf_dir,
     vp = _os.path.join(src.store.table_path, victims[0].path)
     _os.rename(vp, vp + ".hidden")
     try:
-        os.environ["STARLAKE_MV_DEBUG"] = "1"  # no silent full fallback
-        try:
+        with pytest.MonkeyPatch.context() as mp:
+            _forbid_full_refresh(mp)
             assert mv.update_material_view(sess, "mv_t") is True
-        finally:
-            os.environ.pop("STARLAKE_MV_DEBUG", None)
         assert sess.table("mv_t").store.snapshot().commit_type in (
             "delta", "delete_delta", "mixed_delta")
     finally:
@@ -1717,12 +1719,10 @@ def test_join_prune_predicates_unit(spark):
     got2 = mv._join_prune_predicates(ch2, spec, "dim")
     assert got2["other"] == "y IN ('it''''s')"
     # over budget → no predicate (pure optimization, silently off)
-    os.environ["STARLAKE_MV_JOIN_PRUNE_KEY_LIMIT"] = "1"
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(mv, "JOIN_PRUNE_KEY_LIMIT", 1)
         got3 = mv._join_prune_predicates(ch, spec, "dim")
-        assert "fact" not in got3 and "other" not in got3
-    finally:
-        os.environ.pop("STARLAKE_MV_JOIN_PRUNE_KEY_LIMIT", None)
+    assert "fact" not in got3 and "other" not in got3
     # transitively-connected tables are never pruned
     got4 = mv._join_prune_predicates(
         spark.createDataFrame([(5,)], "ck bigint"), spec, "fact")
@@ -1768,11 +1768,9 @@ def test_dim_window_prunes_fact_partitions_physically(sess, spark, sf_dir,
     vp = _os.path.join(ft.store.table_path, victim.path)
     _os.rename(vp, vp + ".hidden")
     try:
-        os.environ["STARLAKE_MV_DEBUG"] = "1"
-        try:
+        with pytest.MonkeyPatch.context() as mp:
+            _forbid_full_refresh(mp)
             assert mv.update_material_view(sess, "mv_p") is True
-        finally:
-            os.environ.pop("STARLAKE_MV_DEBUG", None)
         assert sess.table("mv_p").store.snapshot().commit_type in (
             "delta", "delete_delta", "mixed_delta")
     finally:

@@ -1,15 +1,17 @@
 """Round-11 optimization: MV refresh intermediates ride a capped
-driver collect + Arrow-local relation (mv._mat_touched) instead of
+driver collect + Arrow-local relation (local.mat_local) instead of
 localCheckpoint, so dead-group/threat probes are answered from driver
 rows with no Spark jobs. These tests pin that the fast path and the
-over-cap fallback (STARLAKE_MV_LOCAL_ROW_CAP=0 forces localCheckpoint)
-produce bit-identical view state across the hard shapes: extremum
-retraction (rescan + python anti-join dead keys), whole-group death
-(tombstones), distinct-agg recounts, and the join-MV windows."""
+over-cap fallback (MAT_LOCAL_ROW_CAP=0 sends every non-empty frame to
+localCheckpoint) produce bit-identical view state across the hard
+shapes: extremum retraction (rescan + python anti-join dead keys),
+whole-group death (tombstones), distinct-agg recounts, and the join-MV
+windows."""
 
 import pytest
 from pyspark.sql import DataFrame, functions as F
 
+from starlake_spark import local
 from starlake_spark.plans import mv
 
 
@@ -53,7 +55,7 @@ def test_minmax_storm_fast_equals_fallback_and_full(
     from starlake_spark import create_table
 
     if cap != "default":
-        monkeypatch.setenv("STARLAKE_MV_LOCAL_ROW_CAP", cap)
+        monkeypatch.setattr(local, "MAT_LOCAL_ROW_CAP", int(cap))
     src = create_table(spark, _orders(spark, sf_dir, 0, 600),
                        str(tmp_path / "src"), short_name="src",
                        warehouse=sess.warehouse,
@@ -79,7 +81,7 @@ def test_distinct_storm_fast_equals_fallback_and_full(
     from starlake_spark import create_table
 
     if cap != "default":
-        monkeypatch.setenv("STARLAKE_MV_LOCAL_ROW_CAP", cap)
+        monkeypatch.setattr(local, "MAT_LOCAL_ROW_CAP", int(cap))
     src = create_table(spark, _orders(spark, sf_dir, 0, 600),
                        str(tmp_path / "src"), short_name="src",
                        warehouse=sess.warehouse,

@@ -103,7 +103,7 @@ def test_rollup_minmax_cap_falls_back_to_full(spark, src, tmp_path,
                                               monkeypatch):
     t = _mk(spark, tmp_path)
     _retract_maxima(src)
-    monkeypatch.setenv("STARLAKE_ROLLUP_RESCAN_CELL_LIMIT", "0")
+    monkeypatch.setattr(R, "RESCAN_CELL_LIMIT", 0)
     assert R.refresh_rollup(spark, t)["mode"] == "full"
     assert _got(spark, t) == _want(src)
 

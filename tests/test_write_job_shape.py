@@ -5,9 +5,14 @@ as ONE Spark job — AQE's query-stage split would add a second
 scheduling round-trip + shuffle materialization per commit for a plan
 it cannot improve (it never re-plans an explicit fixed-N repartition).
 Plans that AQE *can* improve (joins, aggregates feeding a write, e.g.
-CoW rewrites over a MoR collapse) must keep it.
+CoW rewrites over a MoR collapse) keep it, unless the table is bucketed:
+a bucketed write always runs without AQE so that no exchange feeding
+the bucket files is coalesced.
 """
 import os
+import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,12 +52,6 @@ def test_aqe_probe_classifies_plans(spark, seed):
     assert not W._aqe_pointless(agg)
     joined = seed.join(agg, "o_custkey")
     assert not W._aqe_pointless(joined)
-    # kill switch
-    os.environ["STARLAKE_WRITE_AQE"] = "keep"
-    try:
-        assert not W._aqe_pointless(seed)
-    finally:
-        del os.environ["STARLAKE_WRITE_AQE"]
 
 
 def test_aqe_restored_when_write_fails(spark, seed, tmp_table_dir):
@@ -62,3 +61,33 @@ def test_aqe_restored_when_write_fails(spark, seed, tmp_table_dir):
     with pytest.raises(Exception):
         t.upsert(bad)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_concurrent_no_aqe_writes_never_see_aqe(spark):
+    """Overlapping no-AQE saves in one session: none may run with AQE
+    turned back on by another's exit (a bucketed write would then let
+    AQE coalesce its buckets), and the last one out restores it."""
+    key = "spark.sql.adaptive.enabled"
+    seen = []
+
+    class _Writer:
+        def save(self, _path):
+            for _ in range(10):
+                seen.append(spark.conf.get(key))
+                time.sleep(0.001)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ts = [threading.Thread(target=W._save_no_aqe,
+                               args=(spark, _Writer(), ""))
+              for _ in range(16)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in ts)
+    finally:
+        sys.setswitchinterval(old)
+    assert len(seen) == 160 and set(seen) == {"false"}
+    assert spark.conf.get(key) == "true"
