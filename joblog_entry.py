@@ -82,7 +82,7 @@ def main() -> None:
     from starlake_spark import meta, table as tbl
     for m, fn_ in [(writer, "write_files"), (dml, "upsert"), (dml, "delete"),
                    (dml, "write_into"), (dml, "delete_keys"), (dml, "update"),
-                   (dml, "_commit_tombstones"), (dml, "compact"),
+                   (dml, "_commit_delta"), (dml, "compact"),
                    (mv, "_change_window"), (mv, "_apply_delta"),
                    (mv, "create_material_view"), (mv, "_mv_init_frame"),
                    (mv, "_sync_distinct_aux"), (mv, "_prune_touched"),

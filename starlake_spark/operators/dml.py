@@ -206,6 +206,119 @@ def _maybe_auto_compact(spark: SparkSession, store: ManifestStore,
             pass
 
 
+_TOMBSTONE_MERGED = "the tombstone's null version would be merged"
+
+
+def _require_keyed(info: TableInfo, what: str,
+                   merged: str | None = None) -> None:
+    """Eligibility guard of the merge-on-read delta writers: the table
+    must be hash-keyed (the MoR collapse needs merge keys) and, when
+    ``merged`` says why a merge operator would corrupt the commit, must
+    declare no merge operators."""
+    if not info.hash_cols:
+        raise ValueError(f"{what} requires hash partition columns")
+    if merged and (info.configuration or {}).get("compaction.merge_operators"):
+        raise ValueError(f"{what} is not supported on tables with declared "
+                         f"merge operators — {merged}")
+
+
+def _txn_key(txn_app_id: str | None, txn_version: int | None) -> str | None:
+    """Registry key of an idempotent write's (txn_app_id, txn_version)
+    pair (Delta's txnAppId/txnVersion); None for an ungated write."""
+    if (txn_app_id is None) != (txn_version is None):
+        raise ValueError("txn_app_id and txn_version must be set together")
+    return f"txn:{txn_app_id}" if txn_app_id is not None else None
+
+
+def _upsert_prologue(store: ManifestStore, source: DataFrame,
+                     registry_key: str | None = None,
+                     registry_version: int | None = None,
+                     what: str = "upsert", merged: str | None = None):
+    """Entry checks of every upsert-shaped write: an eligible table, a
+    source aligned to the declared column case that carries every range
+    column, and the registry gate. Returns None when ``registry_key``
+    already holds ``registry_version`` (a replay), else ``(info,
+    source)`` after the schema merge. The gate runs first, so a replay
+    never evolves the schema."""
+    info = store.table_info()
+    _require_keyed(info, what, merged)
+    source = writer.align_case(source, info)
+    for c in info.range_cols:
+        # generated range columns are derived by normalize_for_write
+        if c not in source.columns and \
+                f"generated.{c}" not in (info.configuration or {}):
+            raise ValueError(f"upsert source must carry range column '{c}' "
+                             "(UpsertCommand.scala:83-88)")
+    if registry_key is not None and \
+            store.snapshot().streaming.get(registry_key, -1) >= registry_version:
+        return None
+    return maybe_merge_schema(source, store), source
+
+
+def _commit_delta(spark: SparkSession, store: ManifestStore, info: TableInfo,
+                  rows: DataFrame | None = None,
+                  tomb_keys: DataFrame | None = None,
+                  registry_key: str | None = None,
+                  registry_version: int | None = None,
+                  dedup: bool = False) -> bool:
+    """The one merge-on-read delta commit: write ``rows`` (postimages)
+    and tombstones for ``tomb_keys`` (a frame of merge keys) as delta
+    files at a new version, expire nothing, then log the commit's
+    changes (cdf.enabled) and run auto-compaction. The commit type says
+    what it carries: ``delta`` (rows only), ``delete_delta``
+    (tombstones only) or ``mixed_delta`` (both; a key in both nets to
+    its postimage under ``dedup``). ``dedup`` collapses in-batch
+    duplicate keys to the last row. With ``registry_key`` the commit
+    records ``registry_version`` under it atomically; returns False
+    when a concurrent retry already landed that version."""
+    from starlake_spark.meta import DuplicateTxnError
+
+    frame, commit_type = rows, "delta"
+    if tomb_keys is not None:
+        # tombstone rows: flag true, every data column an explicit null
+        keys = info.range_cols + info.hash_cols
+        frame = tomb_keys.select(*keys)
+        for f in writer.table_schema(info).fields:
+            if f.name not in keys:
+                frame = frame.withColumn(f.name, F.lit(None).cast(f.dataType))
+        frame = frame.withColumn(reader.TOMBSTONE_COL, F.lit(True))
+        commit_type = "delete_delta"
+        if rows is not None:
+            live = writer.normalize_for_write(rows, info, enforce_schema=False) \
+                         .withColumn(reader.TOMBSTONE_COL, F.lit(False))
+            frame = frame.select(*live.columns).unionByName(live)
+            commit_type = "mixed_delta"
+    txn = store.new_transaction()
+    txn.commit_type = commit_type
+    files = writer.write_files(spark, frame, info, txn, is_base=False,
+                               dedup_batch=dedup)
+    txn.add_files(files)
+    if registry_key is not None:
+        txn.set_streaming_batch(registry_key, registry_version)
+    try:
+        snap = store.commit(txn)
+    except DuplicateTxnError:
+        return False
+    _maybe_log_cdc(spark, store, info, files, snap.version)
+    _maybe_auto_compact(spark, store, info)
+    return True
+
+
+def _upsert_delta(spark: SparkSession, store: ManifestStore,
+                  source: DataFrame, registry_key: str | None = None,
+                  registry_version: int | None = None) -> bool:
+    """MoR delta upsert gated on ``registry_key``; the delta arm of
+    :func:`upsert` and the update mode of the streaming sink. Returns
+    False when the version was already committed."""
+    checked = _upsert_prologue(store, source, registry_key, registry_version)
+    if checked is None:
+        return False
+    info, source = checked
+    return _commit_delta(spark, store, info, source,
+                         registry_key=registry_key,
+                         registry_version=registry_version, dedup=True)
+
+
 def upsert(spark: SparkSession, store: ManifestStore, source: DataFrame,
            use_delta: bool = True,
            txn_app_id: str | None = None,
@@ -237,47 +350,13 @@ def upsert(spark: SparkSession, store: ManifestStore, source: DataFrame,
     full-table CoW rewrite at 100 TB is exactly the accident this
     guard exists to stop).
     """
-    info = store.table_info()
-    if not info.hash_cols:
-        raise ValueError("upsert requires hash partition columns "
-                         "(UpsertCommand.scala:74-76)")
-    source = writer.align_case(source, info)
-    for c in info.range_cols:
-        # generated range columns are derived by normalize_for_write
-        if c not in source.columns and \
-                f"generated.{c}" not in (info.configuration or {}):
-            raise ValueError(f"upsert source must carry range column '{c}' "
-                             "(UpsertCommand.scala:83-88)")
-    info = maybe_merge_schema(source, store)
-
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be set together")
-    txn_key = f"txn:{txn_app_id}" if txn_app_id is not None else None
-    if txn_key is not None:
-        if not use_delta:
-            raise ValueError("idempotent upsert requires the delta path")
-        if store.snapshot().streaming.get(txn_key, -1) >= txn_version:
-            return
-
+    txn_key = _txn_key(txn_app_id, txn_version)
     if use_delta:
-        from starlake_spark.meta import DuplicateTxnError
-
-        txn = store.new_transaction()
-        txn.commit_type = "delta"
-        files = writer.write_files(spark, source, info, txn, is_base=False,
-                                   dedup_batch=True)
-        txn.add_files(files)
-        if txn_key is not None:
-            txn.set_streaming_batch(txn_key, txn_version)
-            try:
-                snap = store.commit(txn)
-            except DuplicateTxnError:
-                return  # concurrent retry already landed this version
-        else:
-            snap = store.commit(txn)
-        _maybe_log_cdc(spark, store, info, files, snap.version)
-        _maybe_auto_compact(spark, store, info)
+        _upsert_delta(spark, store, source, txn_key, txn_version)
         return
+    if txn_key is not None:
+        raise ValueError("idempotent upsert requires the delta path")
+    info, source = _upsert_prologue(store, source)
 
     keys = info.range_cols + info.hash_cols
     allow_full = (info.configuration or {}).get(
@@ -755,11 +834,7 @@ def update(spark: SparkSession, store: ManifestStore, condition,
     # case-insensitive resolver; reference CaseSensitivitySuite):
     # withColumn('VALUE', ...) on a table with 'value' would otherwise
     # add a case-twin column and break downstream resolution
-    import json as _json
-
-    from pyspark.sql import types as _T
-
-    schema = _T.StructType.fromJson(_json.loads(store.table_info().schema_json))
+    schema = writer.table_schema(info)
     canon = {f.name.lower(): f.name for f in schema.fields}
     sets = {canon.get(c.lower(), c): _to_column(e) for c, e in set_exprs.items()}
     # nested-field SET (reference UpdateSuiteBase 'nested data support'):
@@ -770,7 +845,7 @@ def update(spark: SparkSession, store: ManifestStore, condition,
         root, rest = path.split(".", 1)
         root = canon.get(root.lower(), root)
         if root not in canon.values() or \
-                not isinstance(schema[root].dataType, _T.StructType):
+                not isinstance(schema[root].dataType, T.StructType):
             raise ValueError(
                 f"cannot update '{path}': '{root}' is not a struct column")
         base = sets.get(root, F.col(root))
@@ -799,24 +874,13 @@ def update(spark: SparkSession, store: ManifestStore, condition,
     if not use_delta and _delta_dml_default(info):
         use_delta = True
     if use_delta:
-        if not info.hash_cols:
-            raise ValueError("delta update requires hash partition columns; "
-                             "use the rewrite path for range-only tables")
-        if (info.configuration or {}).get("compaction.merge_operators"):
-            raise ValueError(
-                "delta update is not supported on tables with declared "
-                "merge operators — re-written rows would be merged with "
-                "their history instead of replacing it")
+        _require_keyed(info, "delta update",
+                       "re-written rows would be merged with their "
+                       "history instead of replacing it")
         matched = reader.scan(spark, store).filter(F.coalesce(cond, F.lit(False)))
         for c, e in sets.items():
             matched = matched.withColumn(c, e)
-        txn = store.new_transaction()
-        txn.commit_type = "delta"
-        files = writer.write_files(spark, matched, info, txn, is_base=False)
-        txn.add_files(files)
-        snap = store.commit(txn)
-        _maybe_log_cdc(spark, store, info, files, snap.version)
-        _maybe_auto_compact(spark, store, info)
+        _commit_delta(spark, store, info, matched)
         return
 
     def transform(df: DataFrame, cnd: Column) -> DataFrame:
@@ -861,20 +925,12 @@ def delete(spark: SparkSession, store: ManifestStore, condition=None,
         use_delta = True
     if use_delta and condition is not None:
         info = store.table_info()
-        if not info.hash_cols:
-            raise ValueError("delta delete requires hash partition columns; "
-                             "use the rewrite path for range-only tables")
-        if (info.configuration or {}).get("compaction.merge_operators"):
-            raise ValueError(
-                "delta delete is not supported on tables with declared "
-                "merge operators — the tombstone's null version would be "
-                "merged; use the rewrite path (use_delta=False)")
+        _require_keyed(info, "delta delete", _TOMBSTONE_MERGED)
         cond = _to_column(condition)
-        keys = info.range_cols + info.hash_cols
         tomb_keys = (reader.scan(spark, store)
                      .filter(F.coalesce(cond, F.lit(False)))
-                     .select(*keys))
-        _commit_tombstones(spark, store, info, tomb_keys)
+                     .select(*(info.range_cols + info.hash_cols)))
+        _commit_delta(spark, store, info, tomb_keys=tomb_keys)
         return
     if condition is None:
         txn = store.new_transaction()
@@ -892,29 +948,6 @@ def delete(spark: SparkSession, store: ManifestStore, condition=None,
                   cond_sql=condition if isinstance(condition, str) else None)
 
 
-def _commit_tombstones(spark: SparkSession, store: ManifestStore,
-                       info: TableInfo, tomb_keys: DataFrame) -> None:
-    """Write one delete_delta commit tombstoning ``tomb_keys`` (a frame
-    of the table's merge-key columns): flag column true, data columns
-    explicit nulls — the O(deleted keys) MoR delete shape shared by the
-    condition path above and ``delete_keys``."""
-    keys = info.range_cols + info.hash_cols
-    schema = T.StructType.fromJson(json.loads(info.schema_json))
-    tomb = tomb_keys.select(*keys)
-    for f in schema.fields:
-        if f.name not in keys:
-            tomb = tomb.withColumn(f.name, F.lit(None).cast(f.dataType))
-    tomb = tomb.withColumn(reader.TOMBSTONE_COL, F.lit(True))
-    txn = store.new_transaction()
-    txn.commit_type = "delete_delta"
-    files = writer.write_files(spark, tomb, info, txn, is_base=False,
-                               check_invariants=False)
-    txn.add_files(files)
-    snap = store.commit(txn)
-    _maybe_log_cdc(spark, store, info, files, snap.version)
-    _maybe_auto_compact(spark, store, info)
-
-
 def delete_keys(spark: SparkSession, store: ManifestStore,
                 keys_df: DataFrame) -> None:
     """DELETE an explicit key frame via the tombstone-delta path: the
@@ -925,19 +958,18 @@ def delete_keys(spark: SparkSession, store: ManifestStore,
     tables only, rejected under declared merge operators. Keys absent
     from the table tombstone nothing (idempotent re-delivery)."""
     info = store.table_info()
-    if not info.hash_cols:
-        raise ValueError("delete_keys requires hash partition columns "
-                         "(key tombstones need merge keys)")
-    if (info.configuration or {}).get("compaction.merge_operators"):
-        raise ValueError(
-            "delete_keys is not supported on tables with declared merge "
-            "operators — the tombstone's null version would be merged; "
-            "use a condition delete with use_delta=False")
+    _require_keyed(info, "delete_keys", _TOMBSTONE_MERGED)
+    _commit_delta(spark, store, info,
+                  tomb_keys=_distinct_keys(info, keys_df, "keys_df"))
+
+
+def _distinct_keys(info: TableInfo, frame: DataFrame, name: str) -> DataFrame:
+    """The distinct merge keys of a caller's key frame."""
     keys = info.range_cols + info.hash_cols
-    missing = [k for k in keys if k not in keys_df.columns]
+    missing = [k for k in keys if k not in frame.columns]
     if missing:
-        raise ValueError(f"keys_df is missing merge-key columns {missing}")
-    _commit_tombstones(spark, store, info, keys_df.select(*keys).distinct())
+        raise ValueError(f"{name} is missing merge-key columns {missing}")
+    return frame.select(*keys).distinct()
 
 
 def upsert_with_tombstones(spark: SparkSession, store: ManifestStore,
@@ -968,77 +1000,33 @@ def upsert_with_tombstones(spark: SparkSession, store: ManifestStore,
     sources fall back to the two-commit sequence. Same guards as the
     parts: hash table, no declared merge operators.
     """
-    from starlake_spark.meta import DuplicateTxnError
-
-    info = store.table_info()
-    if not info.hash_cols:
-        raise ValueError("upsert requires hash partition columns "
-                         "(UpsertCommand.scala:74-76)")
-    if (info.configuration or {}).get("compaction.merge_operators"):
-        raise ValueError(
-            "tombstones are not supported on tables with declared merge "
-            "operators — the tombstone's null version would be merged")
-    source = writer.align_case(source, info)
-    for c in info.range_cols:
-        if c not in source.columns and \
-                f"generated.{c}" not in (info.configuration or {}):
-            raise ValueError(f"upsert source must carry range column '{c}' "
-                             "(UpsertCommand.scala:83-88)")
     # Gate BEFORE any commit path — including the partial-source
     # two-commit fallback below: a replayed gated call must return
     # without re-committing tombstones, and an invalid txn pair must
-    # error before any commit lands (the fallback's delete_keys used to
-    # run first, leaking a tombstone commit on both counts).
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be set together")
-    txn_key = f"txn:{txn_app_id}" if txn_app_id is not None else None
-    if txn_key is not None and \
-            store.snapshot().streaming.get(txn_key, -1) >= txn_version:
+    # error before any commit lands.
+    txn_key = _txn_key(txn_app_id, txn_version)
+    checked = _upsert_prologue(store, source, txn_key, txn_version,
+                               "upsert_with_tombstones", _TOMBSTONE_MERGED)
+    if checked is None:
         return
-
-    info = maybe_merge_schema(source, store)
-    keys = info.range_cols + info.hash_cols
-    missing = [k for k in keys if k not in tomb_keys.columns]
-    if missing:
-        raise ValueError(f"tomb_keys is missing merge-key columns {missing}")
-    schema = T.StructType.fromJson(json.loads(info.schema_json))
+    info, source = checked
+    dead = _distinct_keys(info, tomb_keys, "tomb_keys")
     gen_cols = {k[len("generated."):]
                 for k in (info.configuration or {})
                 if k.startswith("generated.")}
     src_cols = {c.lower() for c in source.columns} | \
                {c.lower() for c in gen_cols}
-    if any(f.name.lower() not in src_cols for f in schema.fields):
+    if any(f.name.lower() not in src_cols
+           for f in writer.table_schema(info).fields):
         # partial-column postimages: absent = keep existing, which the
         # single-commit shape cannot express — two commits, old shape
         delete_keys(spark, store, tomb_keys)
         upsert(spark, store, source, use_delta=True,
                txn_app_id=txn_app_id, txn_version=txn_version)
         return
-
-    tomb = tomb_keys.select(*keys).distinct()
-    for f in schema.fields:
-        if f.name not in keys:
-            tomb = tomb.withColumn(f.name, F.lit(None).cast(f.dataType))
-    tomb = tomb.withColumn(reader.TOMBSTONE_COL, F.lit(True))
-    live = writer.normalize_for_write(source, info, enforce_schema=False) \
-                 .withColumn(reader.TOMBSTONE_COL, F.lit(False))
-    combined = tomb.select(*live.columns).unionByName(live)
-
-    txn = store.new_transaction()
-    txn.commit_type = "mixed_delta"
-    files = writer.write_files(spark, combined, info, txn, is_base=False,
-                               dedup_batch=True)
-    txn.add_files(files)
-    if txn_key is not None:
-        txn.set_streaming_batch(txn_key, txn_version)
-        try:
-            snap = store.commit(txn)
-        except DuplicateTxnError:
-            return  # concurrent retry already landed this version
-    else:
-        snap = store.commit(txn)
-    _maybe_log_cdc(spark, store, info, files, snap.version)
-    _maybe_auto_compact(spark, store, info)
+    _commit_delta(spark, store, info, source, dead,
+                  registry_key=txn_key, registry_version=txn_version,
+                  dedup=True)
 
 
 def _part_merge_partition(spark: SparkSession, store: ManifestStore,
@@ -1152,7 +1140,6 @@ def compact_small_files(spark: SparkSession, store: ManifestStore,
 
 def _compact_small_once(spark, store, info, threshold_bytes, partition) -> int:
     snap = store.snapshot()
-    merged_away = 0
     txn = store.new_transaction()
     txn.commit_type = "compact"
     all_small: list = []
@@ -1181,8 +1168,7 @@ def _compact_small_once(spark, store, info, threshold_bytes, partition) -> int:
     txn.add_files(files)
     txn.expire_files([f.path for f in all_small])
     store.commit(txn)
-    merged_away = len(all_small)
-    return merged_away
+    return len(all_small)
 
 
 def compact(spark: SparkSession, store: ManifestStore, force: bool = True,
@@ -1339,9 +1325,6 @@ def _compact_once(spark: SparkSession, store: ManifestStore, force: bool = True,
     ) if info.range_cols else True
     merged = reader.scan(spark, store, merge_operators=merge_operators,
                          partition_filter=part_filter if info.range_cols else None)
-    if not info.range_cols:
-        # unpartitioned: single '' partition is the only target
-        pass
     txn = store.new_transaction()
     txn.commit_type = "compact"
     files = writer.write_files(spark, merged, info, txn, is_base=True,
@@ -1390,9 +1373,7 @@ def write_into(spark: SparkSession, store: ManifestStore, df: DataFrame,
             f"identity column '{idcol}' is GENERATED ALWAYS — writes may "
             f"not supply it (set identity.mode=default to allow explicit "
             f"values)")
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be set together")
-    txn_key = f"txn:{txn_app_id}" if txn_app_id is not None else None
+    txn_key = _txn_key(txn_app_id, txn_version)
     if txn_key is not None and store.snapshot().streaming.get(txn_key, -1) >= txn_version:
         return
     info = maybe_merge_schema(df, store)

@@ -559,7 +559,6 @@ def write_files(
     info: TableInfo,
     txn: Transaction,
     is_base: bool = False,
-    check_invariants: bool = True,
     sort_columns: list[str] | None = None,
     target_files: int | None = None,
     cluster_mode: str = "linear",
@@ -609,8 +608,7 @@ def write_files(
             identity_ctx = (idcol, base, block)
     if _is_statically_empty(df):
         return []  # schema-only commit: no rows, no job, no files
-    if check_invariants:
-        df = _invariant_guard(df, info, is_base=is_base)
+    df = _invariant_guard(df, info, is_base=is_base)
 
     if sort_columns:
         if info.hash_cols:

@@ -12,9 +12,14 @@ with an idempotent batch check:
   as the data files, so data+progress are atomic exactly like the
   reference's undo-log carrying query_id/batch_id
   (TransactionCommit.scala:372-377);
-* output modes (StarLakeSink.scala:38-47,66-85): append = plain append
-  (delta commit for hash tables), complete = overwrite, update = delta
-  upsert, hash-partitioned tables only.
+* output modes (StarLakeSink.scala:38-47,66-85): append = plain append,
+  complete = overwrite, update = hash-partitioned tables only (an
+  append into a hash table is an update).
+* update mode has upsert semantics — it is the ``delta`` commit of
+  ``dml.upsert`` ("hash table ⇒ delta commit type",
+  StarLakeSink.scala:49-91): duplicate keys inside one batch collapse
+  to the last row in input order, ``cdf.enabled`` tables get the
+  commit's CDC log, and auto-compaction runs after the commit.
 """
 
 from __future__ import annotations
@@ -46,9 +51,14 @@ class StarStreamSink:
 
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> bool:
         """Idempotent micro-batch write; returns False if skipped."""
+        spark = batch_df.sparkSession
+        if self.output_mode == "update":
+            # the delta commit of dml.upsert, gated on this query's
+            # registry entry instead of a txn:<app> key
+            return dml._upsert_delta(spark, self.store, batch_df,
+                                     self.query_id, batch_id)
         if batch_id <= self.last_batch_id():
             return False
-        spark = batch_df.sparkSession
         info = dml.maybe_merge_schema(batch_df, self.store)
         txn = self.store.new_transaction()
         is_base = self.output_mode == "complete"

@@ -287,3 +287,24 @@ def test_update_nested_struct_field(spark, tmp_path):
         t.update("k = 1", {"k.a": "1"})
     with pytest.raises(ValueError, match="unknown column"):
         t.update("k = 1", {"nope": "1"})
+
+
+def test_tombstone_deletes_pass_not_null_and_check(spark, tmp_table_dir):
+    """Tombstone rows carry explicit nulls in every data column; the
+    write-time invariant guard exempts them from declared NOT NULL and
+    CHECK constraints, so key deletes work on a constrained table."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField("id", T.IntegerType(), False),
+                           T.StructField("v", T.IntegerType(), False)])
+    df = spark.createDataFrame([(i, i + 1) for i in range(6)], schema)
+    t = create_table(spark, df, tmp_table_dir, hash_partitions=["id"],
+                     hash_bucket_num=2,
+                     configuration={"check.vpos": "v > 0"})
+    assert '"nullable":true' not in t.store.table_info().schema_json
+    t.delete("id = 1", use_delta=True)
+    t.delete_keys(spark.createDataFrame([(2,), (3,)], "id int"))
+    assert t.store.snapshot().commit_type == "delete_delta"
+    assert sorted(r.id for r in t.to_df().collect()) == [0, 4, 5]
+    with pytest.raises(Exception, match="CHECK constraint"):
+        t.upsert(spark.createDataFrame([(7, -1)], "id int, v int"))
